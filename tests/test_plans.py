@@ -109,6 +109,35 @@ def test_capped_ivf_plan_partition_pruning(spark, tmp_path_factory):
     )
 
 
+def test_ivfpq_refined_plan_is_one_scan_one_shuffle(spark, tmp_path_factory):
+    """The exact refine is fused into the ADC scan: one probed scan reads
+    codes and raw vectors together, one exchange on query_id carries both
+    rankings — no second scan, no broadcast join of candidates or queries,
+    no interpreted SQL distance fold. The ADC-only plan stays codes-only."""
+    import re
+
+    out = str(tmp_path_factory.mktemp("plan_ivfpq"))
+    corpus = load_table(spark, "embeddings", SF_SMOKE)
+    build_index(
+        spark, corpus, out,
+        EngineConfig(index_type="IVFPQ", nlist=8, pq_m=16, kmeans_sample_fraction=1.0),
+    )
+    q5 = queries_from_embeddings(spark, SF_SMOKE, 5)
+    plan = plan_of(search_index(spark, out, q5, k=10, nprobe=4))
+    exchanges = re.findall(r"Exchange (\w+)\(", plan)
+    assert exchanges == ["hashpartitioning"], f"exactly one shuffle expected:\n{plan}"
+    assert re.search(r"Exchange hashpartitioning\(query_id#", plan), plan
+    assert "BroadcastExchange" not in plan, plan
+    assert "aggregate(zip_with" not in plan, plan
+    scans = re.findall(r"ReadSchema: (struct<[^\n]*>)", plan)
+    assert len(scans) == 1 and "embedding" in scans[0] and "codes" in scans[0], scans
+
+    adc_plan = plan_of(search_index(spark, out, q5, k=10, nprobe=4, exact_refine=False))
+    adc_scans = re.findall(r"ReadSchema: (struct<[^\n]*>)", adc_plan)
+    assert len(adc_scans) == 1 and "codes" in adc_scans[0], adc_scans
+    assert "embedding" not in adc_scans[0], "ADC-only scan must stay codes-only"
+
+
 def test_pricing_pushdown(spark):
     df = QUERIES["q_pricing"](spark, SF_SMOKE)
     plan = plan_of(df)

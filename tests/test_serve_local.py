@@ -130,6 +130,14 @@ def test_lopq_bit_identical(spark, lopq_handle, queries):
     _assert_identical(want, got)
 
 
+def test_lopq_refined_bit_identical(spark, lopq_handle, queries):
+    """Full LOPQ with the exact refine: the fused Spark scan and the
+    driver-side refine score candidates with the same fold."""
+    want = search_index(spark, lopq_handle, queries, k=10, nprobe=2)
+    got = serve_local(lopq_handle, queries, k=10, nprobe=2)
+    _assert_identical(want, got)
+
+
 def test_hnsw_bit_identical(spark, hnsw_handle, queries):
     want = search_index(spark, hnsw_handle, queries, k=10, ef_search=48)
     got = serve_local(hnsw_handle, queries, k=10, ef_search=48)

@@ -73,8 +73,8 @@ def explain_formatted(spark, df) -> str:
 
 def _index_sections(spark, sf_dir):
     """Plans over BUILT index artifacts (not in QUERIES — they need a build
-    step): the IVF probe paths, uncapped and skew-capped. Yields
-    (name, markers, why, df) tuples."""
+    step): the IVF probe paths, uncapped and skew-capped, and the IVFPQ
+    refined search. Yields (name, markers, why, df) tuples."""
     import tempfile
 
     from webscale_vector_search_spark.config import EngineConfig
@@ -151,6 +151,22 @@ def _index_sections(spark, sf_dir):
         "pending-set-sized; a shuffled anti-join here would exchange the "
         "corpus",
         search_index(spark, open_index(spark, attr_dir), q, k=10, nprobe=4),
+    )
+
+    pq_dir = os.path.join(root, "ivfpq")
+    build_index(
+        spark, corpus, pq_dir,
+        EngineConfig(index_type="IVFPQ", nlist=16, pq_m=16, kmeans_sample_fraction=1.0),
+    )
+    yield (
+        "ivfpq_refined_search",
+        ["MapInArrow", "hashpartitioning(query_id", "embedding:array<float>,codes:"],
+        "the exact refine is fused into the ADC scan: ONE probed scan reads "
+        "codes and raw vectors together, the kernel scores only its per-batch "
+        "ADC candidates exactly, and ONE query_id exchange carries both "
+        "rankings — no second scan of the probed lists, no broadcast join, "
+        "no interpreted SQL distance fold",
+        search_index(spark, pq_dir, q, k=10, nprobe=4),
     )
 
     cap_dir = os.path.join(root, "ivf_capped")

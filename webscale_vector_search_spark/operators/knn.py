@@ -296,19 +296,20 @@ def segment_iter(values):
         yield sorted_vals[s], order[s : bounds[i + 1]]
 
 
-def topk_record_batch(parts):
-    """Assemble per-list batch_topk_rows dicts into one output RecordBatch."""
+def topk_record_batch(parts, schema=None):
+    """Assemble per-list batch_topk_rows dicts into one output RecordBatch.
+    ``schema`` (a pyarrow schema) names the columns to emit; the default is
+    the kernels' (query_id, vec_id, distance)."""
     import numpy as np
     import pyarrow as pa
 
-    return pa.RecordBatch.from_pydict(
-        {
-            key: np.concatenate([p[key] for p in parts])
-            for key in ("query_id", "vec_id", "distance")
-        },
-        schema=pa.schema(
+    if schema is None:
+        schema = pa.schema(
             [("query_id", pa.int64()), ("vec_id", pa.int64()), ("distance", pa.float64())]
-        ),
+        )
+    return pa.RecordBatch.from_pydict(
+        {key: np.concatenate([p[key] for p in parts]) for key in schema.names},
+        schema=schema,
     )
 
 
@@ -328,7 +329,10 @@ def batch_topk_rows(dist, ids, q_ids, k: int, tie_margin: int = 64):
     tests/test_topk_kernel.py. Measured 1.5-3x on the multi-query shapes
     (FLAT batches, IVF cells with few probing queries); parity at nq=1.
 
-    dist: (nq, n) float64; ids: (n,) int64; returns dict of flat columns.
+    dist: (nq, n) float64; ids: (n,) int64; returns dict of flat columns,
+    plus "row" — each kept candidate's column index into dist/ids, so a
+    caller can fetch other per-row data (the IVFPQ exact refine reads the
+    candidates' embeddings from the same batch).
     """
     import numpy as np
 
@@ -349,7 +353,28 @@ def batch_topk_rows(dist, ids, q_ids, k: int, tie_margin: int = 64):
         "query_id": np.repeat(q_ids, take)[fin],
         "vec_id": id_flat[fin],
         "distance": d_flat[fin],
+        "row": part.ravel()[top][fin],
     }
+
+
+def seq_sq_l2(Q, V):
+    """Squared L2 of each (query row, candidate row) pair — Q and V are
+    (n, dim) and row i of Q pairs with row i of V — in the SQL kernel's
+    EXACT op order (functions/distance.py::sq_l2: d = q - v in float64,
+    acc += d*d over dims, left to right). The GEMM expansion the scan
+    kernels use differs from this in the last bits; the exact refine scores
+    with this fold, so the Spark scan and serve_local agree to the bit."""
+    import numpy as np
+
+    # the squares are elementwise, so computing them in one vectorised pass
+    # keeps the op order; only the sum must run dim by dim (a numpy
+    # reduction along a row would sum pairwise)
+    sq = np.subtract(Q, V, dtype=np.float64)
+    sq *= sq
+    acc = np.zeros(len(sq))
+    for t in range(sq.shape[1]):
+        acc += sq[:, t]
+    return acc
 
 
 def knn_pandas(

@@ -9,8 +9,9 @@ Spark-first decomposition:
   as a Parquet artifact beside the corpus.
 - encode: map-only numpy kernel over Arrow batches -> codes ARRAY<SMALLINT>
   (SMALLINT because Spark's TINYINT is signed and codes span 0..255).
-  Column pruning means FLAT scans never read codes and PQ scans never read
-  raw vectors (SURVEY.md O5).
+  Column pruning means FLAT scans never read codes and ADC-only PQ scans
+  never read raw vectors (SURVEY.md O5); the exact refine reads both in
+  the same pass.
 - ADC search: per-query lookup table (m x 256 squared-distance table against
   the query's subvectors), then candidate distance = sum of m table lookups.
   Runs as a map-only kernel emitting per-batch partial top-k; the final
@@ -502,6 +503,7 @@ def adc_search(
     local_books: dict | None = None,
     local_rots: dict | None = None,
     rotation: np.ndarray | None = None,
+    refine_k: int | None = None,
 ) -> DataFrame:
     """K8 — asymmetric-distance search over PQ codes.
 
@@ -544,6 +546,20 @@ def adc_search(
     The closure now ships only Q + codebooks + the probed centroid block
     (<1 MB); rebuilding the tables is a handful of (nq x dsub)@(dsub x 256)
     GEMMs — microseconds against a per-task scan of thousands of codes.
+
+    ``refine_k`` turns on the EXACT REFINE, fused into the same scan (the
+    standard two-stage PQ serving: ADC top-k candidates, re-ranked by exact
+    distance, top-refine_k returned). The scan then reads ``embedding``
+    beside the codes of the probed lists. Per Arrow batch it keeps each
+    query's ADC top-k under the (rounded ADC distance, vec_id) order, and
+    scores only those rows with the SQL sq_l2 fold (knn.seq_sq_l2). It
+    emits (query_id, vec_id, adc, exact). After the single query_id
+    exchange the merge keeps ADC rank <= k — exact, because the global ADC
+    top-k is a subset of the union of the per-batch top-ks — and then ranks
+    by (round(exact, 6) + 0.0, vec_id). This is the same answer as a second
+    pass that joins the ADC top-k to the raw vectors and scores them with
+    knn.with_distance, without re-scanning the lists or joining. With
+    ``refine_k`` unset the scan stays codes-only.
     """
     if local_rots is not None and local_books is None:
         raise ValueError(
@@ -573,7 +589,7 @@ def adc_search(
             "(per-cell books carry their own rotations via local_rots)"
         )
 
-    scan_cols = [id_col, "codes"]
+    scan_cols = [id_col, "codes"] + (["embedding"] if refine_k is not None else [])
     if probes is None and centroids is not None and nprobe is not None:
         from webscale_vector_search_spark.operators.ivf import DriverProbes
 
@@ -648,21 +664,47 @@ def adc_search(
         bc_rots = None
     probes = None  # keep the DriverProbes object (qc2/C/slot_of) out of the closure
 
+    dist_cols = ["distance"] if refine_k is None else ["adc", "exact"]
     out_schema = T.StructType(
         [
             T.StructField("query_id", T.LongType()),
             T.StructField("vec_id", T.LongType()),
-            T.StructField("distance", T.DoubleType()),
         ]
+        + [T.StructField(c, T.DoubleType()) for c in dist_cols]
     )
 
     def scan(batches):
+        import pyarrow as pa
+
         from webscale_vector_search_spark.operators.knn import (
             batch_topk_rows,
             list_matrix,
             segment_iter,
+            seq_sq_l2,
             topk_record_batch,
         )
+
+        arrow_schema = pa.schema(
+            [("query_id", pa.int64()), ("vec_id", pa.int64())]
+            + [(c, pa.float64()) for c in dist_cols]
+        )
+
+        def top(d, ids, rows, qsel, emb):
+            """Batch-local ADC top-k of the queries `qsel` (row indices into
+            Q) over the batch rows `rows`; with refine_k, the kept rows'
+            exact distances ride along."""
+            if refine_k is None:
+                return batch_topk_rows(d, ids[rows], q_ids[qsel], k)
+            # query rows stand in for query ids here, so each candidate
+            # pairs with its query vector for the fold
+            p = batch_topk_rows(d, ids[rows], qsel, k)
+            qr = p["query_id"]
+            return {
+                "query_id": q_ids[qr],
+                "vec_id": p["vec_id"],
+                "adc": p["distance"],
+                "exact": seq_sq_l2(Q[qr], emb[rows[p["row"]]]),
+            }
 
         ldt = np.dtype(lut_dtype)
         # per-task table build (see docstring): tables stay worker-local
@@ -688,10 +730,15 @@ def adc_search(
                 continue
             codes = list_matrix(batch, "codes").astype(np.int64, copy=False)  # (n, m)
             ids = batch.column(batch.schema.get_field_index(id_col)).to_numpy()
+            # raw vectors stay a zero-copy view; only candidates are widened
+            emb = list_matrix(batch, "embedding") if refine_k is not None else None
             if not use_probes:
                 # accumulate float64 regardless of LUT precision
                 dist = lut[:, j_idx, codes[:, :]].sum(axis=2, dtype=np.float64)
-                yield topk_record_batch([batch_topk_rows(dist, ids, q_ids, k)])
+                all_rows, all_q = np.arange(len(ids)), np.arange(len(q_ids))
+                yield topk_record_batch(
+                    [top(dist, ids, all_rows, all_q, emb)], arrow_schema
+                )
                 continue
             cent = batch.column(batch.schema.get_field_index("centroid_id")).to_numpy()
             if residual and bc_books is None:
@@ -744,14 +791,21 @@ def adc_search(
                     np.maximum(d, 0.0, out=d)
                 else:
                     d = lut[qsel][:, j_idx, codes[rows]].sum(axis=2, dtype=np.float64)
-                parts.append(batch_topk_rows(d, ids[rows], q_ids[qsel], k))
+                parts.append(top(d, ids, rows, qsel, emb))
             if parts:
-                yield topk_record_batch(parts)
+                yield topk_record_batch(parts, arrow_schema)
 
     partial = codes_df.select(*scan_cols).mapInArrow(scan, out_schema)
+    from webscale_vector_search_spark.functions.distance import round_distance
     from webscale_vector_search_spark.operators.knn import topk
 
-    ranked = topk(partial, k)
+    if refine_k is None:
+        ranked = topk(partial, k)
+    else:
+        # both windows partition by query_id: the second reuses the first's
+        # exchange, so the refine adds a sort, not a shuffle
+        cands = topk(partial, k, order_cols=("adc", "vec_id"), rank_col="adc_rank")
+        ranked = topk(cands.withColumn("distance", round_distance(F.col("exact"))), refine_k)
     return ranked.select(
         "query_id",
         F.col("rank").cast("int").alias("rank"),

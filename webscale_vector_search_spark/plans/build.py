@@ -988,9 +988,10 @@ def search_index(
                 reference's min(64, max(1, nlist // 8)) rule (549)
     - IVFPQ  -> probe-pruned ADC over codes (K8); with exact_refine, the
                 ADC top-(refine_factor*k) candidates are re-ranked with
-                exact distances (standard two-stage PQ serving; the refine
-                IO is candidates-only — |queries| * refine_factor * k rows
-                via a broadcast semi-join over the probed lists)
+                exact distances (standard two-stage PQ serving), fused into
+                the ADC scan: one pass reads codes and raw vectors of the
+                probed lists, only the per-batch ADC candidates are scored
+                exactly, and one query_id exchange merges both rankings
     - HNSW   -> stored-graph traversal (K9, hnsw_stored_search) when the
                 artifact carries persisted adjacency (`hnsw_graph` in the
                 sidecar — every build_index(HNSW) since r5): one task per
@@ -1347,7 +1348,9 @@ def search_index(
                     {c: r.astype("float32") for c, r in handle.lopq_rots.items()}
                 )
             rots_arg = handle._lopq_rots_bc
-    adc = pq_ops.adc_search(
+    # exact_refine runs inside the same scan (adc_search refine_k): the
+    # probed lists are read once, codes and raw vectors together
+    return pq_ops.adc_search(
         _live(_apply_filter(handle.vectors, where, allowed_ids), tomb),
         None if is_local else handle.codebooks,
         queries,
@@ -1357,28 +1360,7 @@ def search_index(
         local_books=local_arg,
         local_rots=rots_arg,
         rotation=None if is_local else handle.pq_rotation,
-    )
-    if not exact_refine:
-        return adc
-    cand_ids = adc.select("query_id", F.col("neighbor_id").alias("vec_id"))
-    # candidates all come from probed lists, so the raw-vector re-read can
-    # partition-prune the same way as the code scan did (without this the
-    # vec_id semi-join scans every list's embeddings)
-    refine = (
-        probes.prune(handle.vectors)
-        .select("vec_id", "embedding")
-        .join(F.broadcast(cand_ids), "vec_id")
-        .join(F.broadcast(queries.select("query_id", "qvec")), "query_id")
-    )
-    from webscale_vector_search_spark.operators.knn import topk, with_distance
-
-    scored = with_distance(refine)
-    ranked = topk(scored, k)
-    return ranked.select(
-        "query_id",
-        F.col("rank").cast("int").alias("rank"),
-        F.col("vec_id").alias("neighbor_id"),
-        "distance",
+        refine_k=k if exact_refine else None,
     )
 
 

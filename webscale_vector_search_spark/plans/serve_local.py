@@ -19,12 +19,12 @@ after warm-up.
 
 Result contract: **identical to ``search_index(...)``** — same schema
 (query_id, rank, neighbor_id, distance), same ``(round(distance, 6),
-vec_id)`` total order, same values. Where the Spark path scores through a
-SQL expression (the IVFPQ exact-refine stage, cosine query normalization),
-this module reproduces the SQL kernel's exact left-fold accumulation order
-(functions/distance.py::sq_l2 / l2_norm) rather than a numpy reduction, so
-even those stages agree to the bit. Property-tested per index type in
-tests/test_serve_local.py.
+vec_id)`` total order, same values. Where the Spark path scores in the
+SQL kernel's left-fold accumulation order (functions/distance.py::sq_l2 /
+l2_norm) rather than a GEMM — the IVFPQ exact refine, which both paths
+score with knn.seq_sq_l2, and cosine query normalization — this module
+reproduces that order, so even those stages agree to the bit.
+Property-tested per index type in tests/test_serve_local.py.
 
 Scale posture: this is explicitly the SMALL-BATCH path (single-digit to
 ~64 queries). It deliberately does what the engine forbids everywhere
@@ -86,19 +86,6 @@ def _query_batch(queries) -> tuple[np.ndarray, np.ndarray]:
     if Q.ndim == 1:
         Q = Q[None, :]
     return np.arange(len(Q), dtype=np.int64), Q
-
-
-def _seq_sq_l2(q: np.ndarray, V: np.ndarray) -> np.ndarray:
-    """Squared L2 of one query against rows of V with the SQL kernel's EXACT
-    accumulation order (sq_l2's left fold: acc + d*d over dims, left to
-    right, float64). The GEMM expansion the scan kernels use differs from
-    this in the last bits; the refine stage must match the SQL form because
-    that is what search_index's refine scores with."""
-    acc = np.zeros(len(V))
-    for t in range(V.shape[1]):
-        d = V[:, t] - q[t]
-        acc += d * d
-    return acc
 
 
 def _normalize_like_sql(Q: np.ndarray) -> np.ndarray:
@@ -720,13 +707,15 @@ def _adc_parts(handle, q_ids, Q, k, probes: _LocalProbes, cache_budget_mb,
     return parts
 
 
-def _refine(handle, q_ids, Q, k, adc_result, probes: _LocalProbes, cache_budget_mb):
-    """The exact-refine second stage: re-rank each query's ADC candidates
-    with exact distances over the raw vectors, scored with the SQL fold
-    (search_index's refine goes through with_distance, not the GEMM
-    kernels — matching its op order keeps the bit-identity contract)."""
+def _refine(handle, q_ids, Q, adc_result, probes: _LocalProbes, cache_budget_mb):
+    """The exact-refine second stage: score each query's ADC candidates
+    exactly over the raw vectors with knn.seq_sq_l2, the fold the fused
+    Spark scan (pq.adc_search refine_k) uses — so both sides agree to the
+    bit. One vectorised fold over all (query, candidate) pairs."""
+    from webscale_vector_search_spark.operators.knn import seq_sq_l2
+
     # vec_id -> (list, row) over the probed union (candidates can only come
-    # from probed lists — the same invariant the Spark refine prunes on)
+    # from probed lists)
     id_chunks, v_chunks = [], []
     for cv in sorted(probes.probe_lists):
         entry = _list_data(handle, cv, cache_budget_mb)
@@ -736,27 +725,15 @@ def _refine(handle, q_ids, Q, k, adc_result, probes: _LocalProbes, cache_budget_
         v_chunks.append(entry["V"])
     all_ids = np.concatenate(id_chunks)
     order = np.argsort(all_ids, kind="stable")
-    sorted_ids = all_ids[order]
-    V_all = np.concatenate(v_chunks).astype(np.float64)
+    V_all = np.concatenate(v_chunks)
 
     adc_qid = np.asarray(adc_result["query_id"])
-    adc_nid = np.asarray(adc_result["neighbor_id"])
-    parts = []
-    for qi in range(len(q_ids)):
-        cand = adc_nid[adc_qid == q_ids[qi]]
-        if cand.size == 0:
-            continue
-        pos = order[np.searchsorted(sorted_ids, cand)]
-        Vc = V_all[pos]
-        d = np.round(_seq_sq_l2(Q[qi], Vc), 6) + 0.0
-        parts.append(
-            {
-                "query_id": np.full(cand.size, q_ids[qi], dtype=np.int64),
-                "vec_id": cand,
-                "distance": d,
-            }
-        )
-    return parts
+    cand = np.asarray(adc_result["neighbor_id"])
+    q_order = np.argsort(q_ids, kind="stable")
+    q_row = q_order[np.searchsorted(q_ids[q_order], adc_qid)]
+    pos = order[np.searchsorted(all_ids[order], cand)]
+    d = seq_sq_l2(Q[q_row], V_all[pos])
+    return [{"query_id": adc_qid, "vec_id": cand, "distance": np.round(d, 6) + 0.0}]
 
 
 # --------------------------------------------------------------------------
@@ -1027,7 +1004,7 @@ def serve_local(
         import pandas as pd
 
         return pd.DataFrame(adc)
-    refined = _refine(handle, q_ids, Q, k, adc, probes, cache_budget_mb)
+    refined = _refine(handle, q_ids, Q, adc, probes, cache_budget_mb)
     return _finalize(refined, k, as_arrays)
 
 
